@@ -15,8 +15,11 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from telecom_competitor_analysis_spark.plans.oracles import ORACLES
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import (
+    ORACLES,
+    QUERIES,
+    load_verified,
+)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -29,8 +32,19 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return dict(QUERIES)
+    """One entry per implemented operator from SURVEY.md §2, in verify
+    order: the driver checks the first 50 against their oracles.
+
+    Oracle queries come first, the one whose last green compare
+    (plans/verified.json) is oldest leading and ties broken by name; an
+    oracle query never recorded there counts as oldest. The rows-only
+    queries, which have no oracle, come last.
+    """
+    green = {name: rec["green"] for name, rec in load_verified().items()}
+    order = sorted(
+        QUERIES, key=lambda n: (n not in ORACLES, green.get(n, 0), n)
+    )
+    return {name: QUERIES[name] for name in order}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -18,6 +18,8 @@ Scale notes inline: each query states why its plan survives 100 TB
 
 from __future__ import annotations
 
+import inspect
+import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1028,460 +1030,17 @@ def q_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Registry
+# Registry: every module-level ``q_*`` function defined here or in
+# queries_ext.py, keyed by its name. The driver's verify order is not kept
+# here; ``__spark_entry__.queries()`` derives it from plans/verified.json.
 # ---------------------------------------------------------------------------
+
+from telecom_competitor_analysis_spark.plans import queries_ext  # noqa: E402
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q_convert_speed": q_convert_speed,
-    "q_sentinel_map": q_sentinel_map,
-    "q_regex_extract": q_regex_extract,
-    "q_digits_only": q_digits_only,
-    "q_ascii_strip": q_ascii_strip,
-    "q_string_clean": q_string_clean,
-    "q_concat_key": q_concat_key,
-    "q_date_stamp": q_date_stamp,
-    "q_surrogate_key": q_surrogate_key,
-    "q_filter_contains": q_filter_contains,
-    "q_validate": q_validate,
-    "q_star_split": q_star_split,
-    "q_pack_cross": q_pack_cross,
-    "q_antijoin_new": q_antijoin_new,
-    "q_lookup_join": q_lookup_join,
-    "q_scd_detect": q_scd_detect,
-    "q_first_per_key": q_first_per_key,
-    "q_topk": q_topk,
-    "q_union_all": q_union_all,
-    "q_agg_latest_price": q_agg_latest_price,
-    "q_tumbling_window": q_tumbling_window,
-    "q_hopping_window": q_hopping_window,
-    "q_json_unwrap": q_json_unwrap,
-    "q_window_rank": q_window_rank,
-    "q_rollup": q_rollup,
-    "q_cube": q_cube,
-    "q_pivot": q_pivot,
-    "q_pivot_dynamic": q_pivot_dynamic,
-    "q_lateral_topk": q_lateral_topk,
-    "q_unpivot": q_unpivot,
-    "q_semi_join": q_semi_join,
-    "q_except": q_except,
-    "q_intersect": q_intersect,
-    "q_distinct_agg": q_distinct_agg,
-    "q_approx_distinct": q_approx_distinct,
-    "q_asof_join": q_asof_join,
-    "q_explode": q_explode,
-    "q_grouping_sets": q_grouping_sets,
-    "q_scalar_subquery": q_scalar_subquery,
-    "q_approx_quantile": q_approx_quantile,
-    "q_outer_join": q_outer_join,
-    "q_date_arith": q_date_arith,
-    "q_histogram": q_histogram,
-    "q_array_funcs": q_array_funcs,
-    "q_salted_join": q_salted_join,
-    "q_map_funcs": q_map_funcs,
-    "q_udtf_tokenize": q_udtf_tokenize,
-    "q_max_by": q_max_by,
-    "q_stats_agg": q_stats_agg,
-    "q_ntile": q_ntile,
-    "q_except_all": q_except_all,
-    "q_scd2_history": q_scd2_history,
-    "q_revenue_topk": q_revenue_topk,
-}
-
-# extension surface (training-data pipeline operators)
-from telecom_competitor_analysis_spark.plans.queries_ext import EXT_QUERIES  # noqa: E402
-
-QUERIES.update(EXT_QUERIES)
-
-# ---------------------------------------------------------------------------
-# Driver-window ordering. The external driver iterates queries() in dict
-# order and checks exactly the FIRST 50 entries against their oracles, so
-# dict order IS the verification schedule. The rotation rule, applied each
-# round:
-#   1. any query whose plan/operator code changed since its last green
-#      correctness row goes first (a stale green is not a green),
-#   2. then queries with a brand-new oracle (never driver-hash-checked),
-#   3. then the queries whose only green row is the OLDEST (round-robin
-#      re-verification of the stable surface),
-#   4. recently-green queries fill the middle (outside the window is fine —
-#      they were checked against this exact code),
-#   5. the rows-only-by-design queries (sketches / ML-seeded sampling /
-#      stubbed media decode) LAST — they can only yield `no_oracle`, so
-#      they must never occupy an oracle-checkable slot in the window.
-# History: r1 checked the SURVEY §2 core (46 green), r2/r3 the 50-query
-# extension surface (50 green), r4 the changed/new operators + oldest
-# rotations (50 green), r5 the changed dedup/percentile/rebalance
-# consumers + 8 new oracles + r1 stragglers (50 green), r6
-# (6 changed + 9 new oracles + 28 r3 greens + 7 r4 greens = 50 green —
-# after r6 no green older than r4). Round 7's window
-# (3 + 36 + 11 = 50): the 3 queries whose plans changed this round
-# (q_ann_index_probe + q_semantic_neighbors now build/probe the
-# skew-capped materialized IVF index; q_token_budget_fill gained the
-# rank-cap pre-filter + min_doc_len floor), the 11 new r7 oracles
-# (q_kmeans_assign, q_semdedup, q_domain_cap, q_training_shards,
-# q_fertility, q_pmi_pairs, and the late-r7 wave q_bucketed_join,
-# q_paragraph_dedup, q_dsir_weights, q_temperature_mix, q_bpe_merges),
-# and ALL 36 queries whose latest green is r4 (the r6 VERDICT item-2
-# rotation debt): 3 + 11 + 36 = 50 — after r7 no green older than r5
-# except the 45 r5 greens parked first below the boundary. Round 8's
-# window (6 + 19 + 25 = 50): the 6 queries whose operator code changed
-# (the 5 r7 ADVICE fixes + q_minhash_lsh_pairs), the 19 new r8 wave
-# oracles, and 25 of the 31 never-driver-checked r7 oracles — the SIX
-# displaced tier-2 items waited below the boundary. Round 9's window
-# (1 + 6 + 7 + 36 = 50): q_containment_pairs (rebuilt this round on
-# the prefix+positional filter), the six never-driver-green oracles
-# (q_gram_incremental, q_char_entropy, q_ann_recall_filtered,
-# q_impute_median, q_maxsim_index, q_multiprobe_lsh — after r9's run
-# every PRE-r9 oracle-checked query has a driver-artifact green), the
-# 7 new r9 wave oracles (each locally driver-sim green at both SFs on
-# declaration), and the 36 oldest parked r5 greens (the 8 displaced r5
-# greens park first below the boundary and lead the r10 window).
-# Round 10's window (2 + 19 + 16 + 13 = 50): q_bleu/q_rouge_n (id
-# aggregates hardened F.first -> F.min, a plan change), the 19 new r10
-# wave oracles, the 16 parked r5 greens (oldest in the repo — the r9
-# VERDICT rotation plan), and the 13 oldest r6 greens; after r10 no
-# oracle's latest green is older than r6, and the remaining 34 r6
-# greens lead the r11 window (the 11 parked when the later r10 waves
-# displaced them lead those).
-# Round 11's window (2 + 14 + 11 + 23 = 50): q_chrf (single-pass gram
-# aggregate rebuild) + q_bradley_terry (btPreagg flag plumbing), the
-# 14 new r11 wave oracles, and ALL 34 remaining r6 greens (the 11
-# displaced ones first, per the r10 VERDICT plan); after r11 no
-# oracle's latest driver green is older than r7. The r7 greens lead
-# the r12 window.
-# Round 12's window (3 + 12 + 6 + 29 = 50): the 3 changed entries
-# (q_freshness_decay sdiv rewrite, q_bpe_apply limit-before-fold —
-# both r12 ADVICE — and q_label_propagation's oracle factored into
-# the shared _LP_CTES), the 12 new r12 wave oracles, the 6 parked
-# r11 wave-E/F/G oracles (r11 VERDICT item 1: they lead), and the
-# 29 oldest r7 greens. The 12-strong new tier displaces 21 r7
-# greens — they park first below the boundary and lead the r13
-# window (the r7/r9 precedent: rotation debt is explicit, ordered,
-# and first in line).
-# Round 13's window (34 + 16 = 50): ALL 34 plan-changed stale greens —
-# the r12 optimization waves changed 35 query plans AFTER the r12
-# window froze (r12 VERDICT item 1: only 4 of them got a post-change
-# driver green), so the 31 still-stale ones lead, joined by the 3
-# queries r13's own optimization waves touched that were not already
-# in that set (q_kcenter_select, q_knn_hubness, q_winsorize; the other
-# r13 touches — q_pagerank, q_triangle_count, q_containment_pairs,
-# q_bradley_terry — are inside the 31) — then 16 of the 18 distinct
-# parked r7 greens (3 of the 21 are themselves plan-changed and sit in
-# tier 1). The 2 displaced r7 greens (q_simhash64, q_word_freq) park
-# first below the boundary and lead the r14 window.
-# The first 50 entries below ARE the window — count them when editing.
-# ---------------------------------------------------------------------------
-
-VERIFY_PRIORITY = [
-    # ============ ROUND-13 WINDOW (first 50) ============
-    # tier 1 — the 34 queries whose plan/operator code changed since
-    # their last driver green (rule #1: a stale green is not a green):
-    # the 31 r12-optimization plan-changed queries left stale when the
-    # r12 window was frozen pre-optimization (r12 VERDICT item 1 — the
-    # 35 plans/r12 dump pairs minus the 4 already driver-green:
-    # q_kmeans_assign, q_conformal_coverage, q_graph_modularity,
-    # q_label_propagation), plus the 3 queries newly plan-changed in
-    # r13 and not already in that set (q_kcenter_select corpus
-    # checkpoint, q_knn_hubness narrow-window projection + scan guard,
-    # q_winsorize percentile-input guard). The r13-touched overlap
-    # (q_pagerank, q_triangle_count, q_containment_pairs,
-    # q_bradley_terry) is already inside the 31.
-    "q_anomaly_mad",
-    "q_band_tuning",
-    "q_bleu",
-    "q_bradley_terry",
-    "q_candidate_precision",
-    "q_cluster_chaining",
-    "q_containment_pairs",
-    "q_corpus_curate",
-    "q_corpus_overlap",
-    "q_ece",
-    "q_hard_negatives",
-    "q_keeper_policy_diff",
-    "q_lsh_recall",
-    "q_mutation_recall",
-    "q_ndcg",
-    "q_ngram_jaccard",
-    "q_nprobe_sweep",
-    "q_pagerank",
-    "q_perplexity_mix",
-    "q_power_iteration",
-    "q_pq_ann",
-    "q_pq_recall",
-    "q_preference_pairs",
-    "q_quality_calibration",
-    "q_quantile_sketch_audit",
-    "q_rbo",
-    "q_rouge_n",
-    "q_silhouette",
-    "q_textrank_keywords",
-    "q_triangle_count",
-    "q_two_stage_rerank",
-    "q_kcenter_select",
-    "q_knn_hubness",
-    "q_winsorize",
-    # tier 2 — 16 of the 18 distinct parked r7 greens (the r12 window
-    # displaced 21; 3 of them are plan-changed and sit in tier 1):
-    # oldest-latest-green in the repo, per the r12 boundary note
-    "q_lang_confusion",
-    "q_aa_calibration",
-    "q_hll_merge",
-    "q_dp_mean",
-    "q_event_trigrams",
-    "q_salt_plan",
-    "q_coverage_curve",
-    "q_reshard_stability",
-    "q_table_checksum",
-    "q_map_funcs",
-    "q_max_by",
-    "q_median",
-    "q_string_agg",
-    "q_udaf_weighted",
-    "q_embedding_lsh_topk",
-    "q_embedding_ivf_topk",
-    # --- window boundary: entries below are OUTSIDE the first 50. ---
-    # FIRST the 2 r7 greens the 34-strong tier 1 displaced — they
-    # LEAD the r14 window (rotation debt explicit, ordered, first in
-    # line — the r12/r13 precedent):
-    "q_simhash64",
-    "q_word_freq",
-    # then every other oracle-checked query in its prior relative
-    # order (r12-window greens are the newest; r8-r11 greens follow
-    # their existing round-tagged ordering below)
-    "q_freshness_decay",
-    "q_bpe_apply",
-    "q_label_propagation",
-    "q_ivfpq_ann",
-    "q_ivfpq_recall",
-    "q_pack_efficiency",
-    "q_dp_histogram",
-    "q_countmin_audit",
-    "q_ams_f2",
-    "q_readability",
-    "q_compact_plan",
-    "q_graph_modularity",
-    "q_hll_audit",
-    "q_conformal_coverage",
-    "q_temporal_split",
-    "q_char_entropy_rate",
-    "q_burstiness",
-    "q_bpe_compression_curve",
-    "q_delete_vectors",
-    "q_pruning_stats",
-    "q_bloom_fpp_audit",
-    "q_ann_index_probe",
-    "q_semantic_neighbors",
-    "q_token_budget_fill",
-    "q_kmeans_assign",
-    "q_semdedup",
-    "q_domain_cap",
-    "q_training_shards",
-    "q_fertility",
-    "q_pmi_pairs",
-    "q_bucketed_join",
-    "q_paragraph_dedup",
-    "q_dsir_weights",
-    "q_temperature_mix",
-    "q_bpe_merges",
-    "q_validate",
-    "q_star_split",
-    "q_pack_cross",
-    "q_antijoin_new",
-    "q_lookup_join",
-    "q_scd_detect",
-    "q_first_per_key",
-    "q_topk",
-    "q_union_all",
-    "q_tumbling_window",
-    "q_json_unwrap",
-    "q_window_rank",
-    "q_rollup",
-    "q_pivot",
-    "q_histogram",
-    "q_common_ngrams",
-    "q_pii_scrub",
-    "q_sample_exact_n",
-    "q_random_projection",
-    "q_chunk_overlap",
-    "q_session_stats",
-    "q_group_topk_words",
-    "q_embedding_quantize",
-    "q_event_funnel",
-    "q_corpus_diff",
-    "q_session_window",
-    "q_key_skew",
-    "q_interval_overlap",
-    "q_setsim_join",
-    "q_heavy_hitters",
-    "q_minhash_lsh_pairs",
-    "q_semantic_decontaminate",
-    "q_sizing_report",
-    "q_shard_balance",
-    "q_lsh_band_stats",
-    "q_url_dedup",
-    "q_line_filter",
-    "q_ngram_novelty",
-    "q_annotator_agreement",
-    "q_doremi_step",
-    "q_span_corruption",
-    "q_prefix_rule_match",
-    "q_k_anonymity",
-    "q_corpus_drift",
-    "q_oov_rate",
-    "q_curriculum_order",
-    "q_quality_classifier",
-    "q_phrase_search",
-    "q_label_vote",
-    "q_dup_span_remove",
-    "q_rrf_fusion",
-    "q_rollup_incremental",
-    "q_leakage_safe_split",
-    "q_zorder_layout",
-    "q_knn_label_audit",
-    "q_embedding_drift",
-    "q_bloom_prefilter_join",
-    "q_profile_table",
-    "q_dup_rate_by_domain",
-    "q_ann_filtered",
-    "q_maxsim_retrieval",
-    "q_skyline",
-    "q_vocab_coverage",
-    "q_gram_matrix",
-    "q_ivf_bucket_stats",
-    "q_gram_incremental",
-    "q_char_entropy",
-    "q_ann_recall_filtered",
-    "q_impute_median",
-    "q_maxsim_index",
-    "q_multiprobe_lsh",
-    "q_expectations",
-    "q_pass_at_k",
-    "q_winrate_ci",
-    "q_scaling_fit",
-    "q_bootstrap_ci",
-    "q_mmr_select",
-    "q_cdc_chunks",
-    "q_rank_correlation",
-    "q_zipf_fit",
-    "q_agg_latest_price",
-    "q_cube",
-    "q_semi_join",
-    "q_except",
-    "q_intersect",
-    "q_distinct_agg",
-    "q_explode",
-    "q_grouping_sets",
-    "q_scalar_subquery",
-    "q_outer_join",
-    "q_date_arith",
-    "q_array_funcs",
-    "q_udtf_tokenize",
-    "q_revenue_topk",
-    "q_train_test_split",
-    "q_ntile",
-    "q_except_all",
-    "q_curate_incremental",
-    "q_dedup_exact",
-    "q_minhash",
-    "q_simhash_pairs",
-    "q_embedding_topk",
-    "q_embedding_dup",
-    "q_resample_daily",
-    "q_moving_avg",
-    "q_simhash64_pairs",
-    "q_semdedup_scaled",
-    "q_edit_distance_pairs",
-    "q_kcore",
-    "q_l_diversity",
-    "q_length_buckets",
-    "q_frame_dedup",
-    "q_group_kfold",
-    "q_assortativity",
-    "q_mi_lang_source",
-    "q_event_transitions",
-    "q_cluster_purity",
-    "q_heaps_fit",
-    "q_js_divergence",
-    "q_gini_concentration",
-    "q_minhash_jaccard_est",
-    "q_mix_rebalance",
-    "q_frame_sample",
-    "q_incremental_topk",
-    "q_bm25_search",
-    "q_bigram_lm",
-    "q_fuzzy_join",
-    "q_weighted_sample",
-    "q_cdc_apply",
-    "q_retention_cohorts",
-    "q_range_window",
-    "q_ann_recall",
-    "q_variant_extract",
-    "q_kmv_distinct",
-    "q_lateral_topk",
-    "q_convert_speed",
-    "q_sentinel_map",
-    "q_regex_extract",
-    "q_digits_only",
-    "q_ascii_strip",
-    "q_string_clean",
-    "q_concat_key",
-    "q_date_stamp",
-    "q_surrogate_key",
-    "q_filter_contains",
-    "q_asof_join",
-    "q_salted_join",
-    "q_sessionize",
-    "q_chrf",
-    "q_distinct_ngrams",
-    "q_blocklist_screen",
-    "q_event_runs",
-    "q_t_closeness",
-    "q_feature_hash_collisions",
-    "q_media_sniff",
-    "q_clustering_coeff",
-    "q_scd2_history",
-    "q_quality_repetition",
-    "q_decontaminate",
-    "q_tfidf",
-    "q_embedding_outlier",
-    "q_stats_agg",
-    "q_percentile_exact",
-    "q_hopping_window",
-    "q_unpivot",
-    "q_simhash",
-    "q_text_stats",
-    "q_token_count",
-    "q_lang_id",
-    "q_fingerprint",
-    "q_bm25",
-    "q_range_join",
-    "q_sentiment",
-    "q_integrity_audit",
-    "q_multimodal_meta",
-    "q_stream_join",
-    "q_stratified_sample",
-    "q_sequence_pack",
-    "q_dedup_clusters",
-    "q_dup_graph_stats",
-    "q_canonical_docs",
-    "q_pivot_dynamic",
-    "q_cogroup_asof",
-    "q_dedup_incremental",
-    "q_dup_span_stats",
-    "q_recursive_hierarchy",
-    "q_gopher_rules",
-    "q_star_join",
-]
-
-_ROWS_ONLY_LAST = [
-    "q_approx_distinct",
-    "q_approx_quantile",
-    "q_minhash_ml",
-    "q_multimodal_decode",
-]
-
-_middle = [
-    n for n in QUERIES if n not in VERIFY_PRIORITY and n not in _ROWS_ONLY_LAST
-]
-QUERIES = {
-    n: QUERIES[n] for n in (VERIFY_PRIORITY + _middle + _ROWS_ONLY_LAST)
+    name: fn
+    for mod in (sys.modules[__name__], queries_ext)
+    for name, fn in vars(mod).items()
+    if name.startswith("q_") and inspect.isfunction(fn)
+    and fn.__module__ == mod.__name__
 }

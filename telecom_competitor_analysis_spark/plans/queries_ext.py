@@ -5,8 +5,6 @@ analysis, multimodal plumbing. Same oracle-parity rules as queries.py.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -4848,35 +4846,12 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     immediately to per-supplier-pair counts, and each MM iteration is
     two broadcast-size joins (the ratings table has one row per item)
     + one integer-sum aggregate. Fixed 2 iterations keeps the plan
-    static; production would loop to a tolerance with the same body.
-
-    Multiplicity pre-aggregation (the documented r8 lever, probed r10
-    and found MOOT here, wired behind ``spark.graft.btPreagg`` r11 per
-    VERDICT item 6): grouping identical (part, supplier, price)
-    triples to a multiplicity m before the comparison join — with pair
-    weights m_a·m_b — is exact under these semantics (the join keys on
-    part + strict supplier order, never row identity, so every raw
-    row-pair between two duplicate triples carries the identical
-    comparison outcome) and cuts pair volume quadratically in the
-    duplicate rate. Measured on this testdata: 60,000/60,000 (sf0.01)
-    and 600,000/600,000 (sf0.1) triples are DISTINCT → raw-vs-preagg
-    pair volume ratio exactly 1.0; the pre-agg would add one
-    corpus-wide exchange for zero pair reduction, so the flag DEFAULTS
-    OFF for this corpus and exists for real preference corpora with
-    duplicate comparisons (common in RLHF dedup'd-prompt data, absent
-    in price quotes keyed by quantity). The weighted-equals-raw
-    equality is pinned on a planted-duplicate fixture in
-    tests/test_wave11.py."""
+    static; production would loop to a tolerance with the same body."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         "l_suppkey",
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("pc"),
     )
-    preagg = spark.conf.get("spark.graft.btPreagg", "false") == "true"
-    if preagg:
-        li = li.groupBy("l_partkey", "l_suppkey", "pc").agg(
-            F.count(F.lit(1)).cast("long").alias("m")
-        )
     # r13 (guide §3.1 — pick the join strategy deliberately): the planner
     # broadcast the whole 600k-row comparison side (its size estimate
     # sits under the 10 MB auto-broadcast threshold), which (a) builds a
@@ -4892,31 +4867,13 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("a.l_partkey") == F.col("b.l_partkey"))
         & (F.col("a.l_suppkey") < F.col("b.l_suppkey")),
     ).where(F.col("a.pc") != F.col("b.pc"))
-    if preagg:
-        pairs = raw.groupBy(
-            F.col("a.l_suppkey").alias("sa"),
-            F.col("b.l_suppkey").alias("sb"),
-        ).agg(
-            F.sum(
-                F.when(
-                    F.col("a.pc") < F.col("b.pc"),
-                    F.col("a.m") * F.col("b.m"),
-                ).otherwise(F.lit(0))
-            )
-            .cast("long")
-            .alias("w"),
-            F.sum(F.col("a.m") * F.col("b.m")).cast("long").alias("n"),
-        )
-    else:
-        pairs = raw.groupBy(
-            F.col("a.l_suppkey").alias("sa"),
-            F.col("b.l_suppkey").alias("sb"),
-        ).agg(
-            F.sum(
-                F.when(F.col("a.pc") < F.col("b.pc"), 1).otherwise(0)
-            ).alias("w"),
-            F.count(F.lit(1)).alias("n"),
-        )
+    pairs = raw.groupBy(
+        F.col("a.l_suppkey").alias("sa"),
+        F.col("b.l_suppkey").alias("sb"),
+    ).agg(
+        F.sum(F.when(F.col("a.pc") < F.col("b.pc"), 1).otherwise(0)).alias("w"),
+        F.count(F.lit(1)).alias("n"),
+    )
     # r12 optimization (guide §2.4/§5): the per-supplier-pair aggregate
     # is TINY (≤ supplier-pair cardinality — ~175k rows of 4 ints at
     # sf0.1) but its lineage holds the ~9M-row part-blocked comparison
@@ -11757,233 +11714,3 @@ def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .unionByName(total)
     )
-
-
-EXT_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q_ndcg": q_ndcg,
-    "q_edit_distance_pairs": q_edit_distance_pairs,
-    "q_kcore": q_kcore,
-    "q_l_diversity": q_l_diversity,
-    "q_chrf": q_chrf,
-    "q_band_tuning": q_band_tuning,
-    "q_length_buckets": q_length_buckets,
-    "q_frame_dedup": q_frame_dedup,
-    "q_candidate_precision": q_candidate_precision,
-    "q_group_kfold": q_group_kfold,
-    "q_assortativity": q_assortativity,
-    "q_nprobe_sweep": q_nprobe_sweep,
-    "q_mi_lang_source": q_mi_lang_source,
-    "q_event_transitions": q_event_transitions,
-    "q_knn_hubness": q_knn_hubness,
-    "q_cluster_purity": q_cluster_purity,
-    "q_heaps_fit": q_heaps_fit,
-    "q_js_divergence": q_js_divergence,
-    "q_gini_concentration": q_gini_concentration,
-    "q_bleu": q_bleu,
-    "q_bootstrap_ci": q_bootstrap_ci,
-    "q_mmr_select": q_mmr_select,
-    "q_cdc_chunks": q_cdc_chunks,
-    "q_rank_correlation": q_rank_correlation,
-    "q_silhouette": q_silhouette,
-    "q_zipf_fit": q_zipf_fit,
-    "q_expectations": q_expectations,
-    "q_rouge_n": q_rouge_n,
-    "q_pass_at_k": q_pass_at_k,
-    "q_winrate_ci": q_winrate_ci,
-    "q_scaling_fit": q_scaling_fit,
-    "q_textrank_keywords": q_textrank_keywords,
-    "q_label_propagation": q_label_propagation,
-    "q_semantic_decontaminate": q_semantic_decontaminate,
-    "q_bradley_terry": q_bradley_terry,
-    "q_url_dedup": q_url_dedup,
-    "q_line_filter": q_line_filter,
-    "q_ngram_novelty": q_ngram_novelty,
-    "q_preference_pairs": q_preference_pairs,
-    "q_mutation_recall": q_mutation_recall,
-    "q_triangle_count": q_triangle_count,
-    "q_annotator_agreement": q_annotator_agreement,
-    "q_doremi_step": q_doremi_step,
-    "q_span_corruption": q_span_corruption,
-    "q_prefix_rule_match": q_prefix_rule_match,
-    "q_k_anonymity": q_k_anonymity,
-    "q_corpus_drift": q_corpus_drift,
-    "q_lsh_recall": q_lsh_recall,
-    "q_sizing_report": q_sizing_report,
-    "q_shard_balance": q_shard_balance,
-    "q_quality_calibration": q_quality_calibration,
-    "q_lsh_band_stats": q_lsh_band_stats,
-    "q_kmeans_assign": q_kmeans_assign,
-    "q_semdedup": q_semdedup,
-    "q_semdedup_scaled": q_semdedup_scaled,
-    "q_domain_cap": q_domain_cap,
-    "q_training_shards": q_training_shards,
-    "q_fertility": q_fertility,
-    "q_pmi_pairs": q_pmi_pairs,
-    "q_bm25_search": q_bm25_search,
-    "q_cdc_apply": q_cdc_apply,
-    "q_range_window": q_range_window,
-    "q_variant_extract": q_variant_extract,
-    "q_pagerank": q_pagerank,
-    "q_kmv_distinct": q_kmv_distinct,
-    "q_retention_cohorts": q_retention_cohorts,
-    "q_cogroup_asof": q_cogroup_asof,
-    "q_bigram_lm": q_bigram_lm,
-    "q_fuzzy_join": q_fuzzy_join,
-    "q_canonical_docs": q_canonical_docs,
-    "q_dedup_incremental": q_dedup_incremental,
-    "q_ann_index_probe": q_ann_index_probe,
-    "q_token_budget_fill": q_token_budget_fill,
-    "q_dup_span_stats": q_dup_span_stats,
-    "q_semantic_neighbors": q_semantic_neighbors,
-    "q_recursive_hierarchy": q_recursive_hierarchy,
-    "q_gopher_rules": q_gopher_rules,
-    "q_perplexity_mix": q_perplexity_mix,
-    "q_star_join": q_star_join,
-    "q_bucketed_join": q_bucketed_join,
-    "q_weighted_sample": q_weighted_sample,
-    "q_tfidf": q_tfidf,
-    "q_embedding_outlier": q_embedding_outlier,
-    "q_quality_repetition": q_quality_repetition,
-    "q_decontaminate": q_decontaminate,
-    "q_percentile_exact": q_percentile_exact,
-    "q_sessionize": q_sessionize,
-    "q_session_stats": q_session_stats,
-    "q_session_window": q_session_window,
-    "q_event_funnel": q_event_funnel,
-    "q_corpus_diff": q_corpus_diff,
-    "q_winsorize": q_winsorize,
-    "q_dup_graph_stats": q_dup_graph_stats,
-    "q_key_skew": q_key_skew,
-    "q_minhash_ml": q_minhash_ml,
-    "q_corpus_curate": q_corpus_curate,
-    "q_curate_incremental": q_curate_incremental,
-    "q_train_test_split": q_train_test_split,
-    "q_stratified_sample": q_stratified_sample,
-    "q_sample_exact_n": q_sample_exact_n,
-    "q_mix_rebalance": q_mix_rebalance,
-    "q_sequence_pack": q_sequence_pack,
-    "q_udaf_weighted": q_udaf_weighted,
-    "q_dedup_clusters": q_dedup_clusters,
-    "q_resample_daily": q_resample_daily,
-    "q_moving_avg": q_moving_avg,
-    "q_sentiment": q_sentiment,
-    "q_bm25": q_bm25,
-    "q_integrity_audit": q_integrity_audit,
-    "q_embedding_dup": q_embedding_dup,
-    "q_range_join": q_range_join,
-    "q_stream_join": q_stream_join,
-    "q_string_agg": q_string_agg,
-    "q_median": q_median,
-    "q_dedup_exact": q_dedup_exact,
-    "q_paragraph_dedup": q_paragraph_dedup,
-    "q_dsir_weights": q_dsir_weights,
-    "q_temperature_mix": q_temperature_mix,
-    "q_bpe_merges": q_bpe_merges,
-    "q_minhash": q_minhash,
-    "q_minhash_lsh_pairs": q_minhash_lsh_pairs,
-    "q_simhash": q_simhash,
-    "q_simhash_pairs": q_simhash_pairs,
-    "q_simhash64": q_simhash64,
-    "q_simhash64_pairs": q_simhash64_pairs,
-    "q_minhash_jaccard_est": q_minhash_jaccard_est,
-    "q_word_freq": q_word_freq,
-    "q_group_topk_words": q_group_topk_words,
-    "q_common_ngrams": q_common_ngrams,
-    "q_pii_scrub": q_pii_scrub,
-    "q_ngram_jaccard": q_ngram_jaccard,
-    "q_containment_pairs": q_containment_pairs,
-    "q_oov_rate": q_oov_rate,
-    "q_curriculum_order": q_curriculum_order,
-    "q_quality_classifier": q_quality_classifier,
-    "q_phrase_search": q_phrase_search,
-    "q_label_vote": q_label_vote,
-    "q_dup_span_remove": q_dup_span_remove,
-    "q_rrf_fusion": q_rrf_fusion,
-    "q_rollup_incremental": q_rollup_incremental,
-    "q_leakage_safe_split": q_leakage_safe_split,
-    "q_setsim_join": q_setsim_join,
-    "q_corpus_overlap": q_corpus_overlap,
-    "q_zorder_layout": q_zorder_layout,
-    "q_pq_ann": q_pq_ann,
-    "q_knn_label_audit": q_knn_label_audit,
-    "q_hard_negatives": q_hard_negatives,
-    "q_interval_overlap": q_interval_overlap,
-    "q_embedding_drift": q_embedding_drift,
-    "q_bloom_prefilter_join": q_bloom_prefilter_join,
-    "q_pq_recall": q_pq_recall,
-    "q_text_stats": q_text_stats,
-    "q_token_count": q_token_count,
-    "q_lang_id": q_lang_id,
-    "q_fingerprint": q_fingerprint,
-    "q_embedding_topk": q_embedding_topk,
-    "q_random_projection": q_random_projection,
-    "q_embedding_quantize": q_embedding_quantize,
-    "q_chunk_overlap": q_chunk_overlap,
-    "q_embedding_lsh_topk": q_embedding_lsh_topk,
-    "q_incremental_topk": q_incremental_topk,
-    "q_ann_recall": q_ann_recall,
-    "q_embedding_ivf_topk": q_embedding_ivf_topk,
-    "q_multimodal_meta": q_multimodal_meta,
-    "q_multimodal_decode": q_multimodal_decode,
-    "q_frame_sample": q_frame_sample,
-    "q_heavy_hitters": q_heavy_hitters,
-    "q_profile_table": q_profile_table,
-    "q_dup_rate_by_domain": q_dup_rate_by_domain,
-    "q_ann_filtered": q_ann_filtered,
-    "q_maxsim_retrieval": q_maxsim_retrieval,
-    "q_skyline": q_skyline,
-    "q_kcenter_select": q_kcenter_select,
-    "q_vocab_coverage": q_vocab_coverage,
-    "q_gram_matrix": q_gram_matrix,
-    "q_ivf_bucket_stats": q_ivf_bucket_stats,
-    "q_gram_incremental": q_gram_incremental,
-    "q_char_entropy": q_char_entropy,
-    "q_ann_recall_filtered": q_ann_recall_filtered,
-    "q_impute_median": q_impute_median,
-    "q_maxsim_index": q_maxsim_index,
-    "q_multiprobe_lsh": q_multiprobe_lsh,
-    "q_bpe_apply": q_bpe_apply,
-    "q_distinct_ngrams": q_distinct_ngrams,
-    "q_blocklist_screen": q_blocklist_screen,
-    "q_event_runs": q_event_runs,
-    "q_rbo": q_rbo,
-    "q_two_stage_rerank": q_two_stage_rerank,
-    "q_ece": q_ece,
-    "q_t_closeness": q_t_closeness,
-    "q_anomaly_mad": q_anomaly_mad,
-    "q_freshness_decay": q_freshness_decay,
-    "q_feature_hash_collisions": q_feature_hash_collisions,
-    "q_media_sniff": q_media_sniff,
-    "q_clustering_coeff": q_clustering_coeff,
-    "q_power_iteration": q_power_iteration,
-    "q_char_entropy_rate": q_char_entropy_rate,
-    "q_burstiness": q_burstiness,
-    "q_bpe_compression_curve": q_bpe_compression_curve,
-    "q_delete_vectors": q_delete_vectors,
-    "q_pruning_stats": q_pruning_stats,
-    "q_bloom_fpp_audit": q_bloom_fpp_audit,
-    "q_ivfpq_ann": q_ivfpq_ann,
-    "q_ivfpq_recall": q_ivfpq_recall,
-    "q_pack_efficiency": q_pack_efficiency,
-    "q_dp_histogram": q_dp_histogram,
-    "q_countmin_audit": q_countmin_audit,
-    "q_ams_f2": q_ams_f2,
-    "q_readability": q_readability,
-    "q_compact_plan": q_compact_plan,
-    "q_graph_modularity": q_graph_modularity,
-    "q_hll_audit": q_hll_audit,
-    "q_conformal_coverage": q_conformal_coverage,
-    "q_temporal_split": q_temporal_split,
-    "q_lang_confusion": q_lang_confusion,
-    "q_quantile_sketch_audit": q_quantile_sketch_audit,
-    "q_aa_calibration": q_aa_calibration,
-    "q_cluster_chaining": q_cluster_chaining,
-    "q_hll_merge": q_hll_merge,
-    "q_dp_mean": q_dp_mean,
-    "q_event_trigrams": q_event_trigrams,
-    "q_keeper_policy_diff": q_keeper_policy_diff,
-    "q_salt_plan": q_salt_plan,
-    "q_coverage_curve": q_coverage_curve,
-    "q_reshard_stability": q_reshard_stability,
-    "q_table_checksum": q_table_checksum,
-}

@@ -10,11 +10,12 @@ import pytest
 from telecom_competitor_analysis_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+SHUFFLE_PARTITIONS = 4
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", shuffle_partitions=4)
+    s = get_spark(app_name="tests", shuffle_partitions=SHUFFLE_PARTITIONS)
     yield s
 
 

@@ -6,8 +6,11 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
-from telecom_competitor_analysis_spark.plans.oracles import ORACLES
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import (
+    ORACLES,
+    QUERIES,
+    load_verified,
+)
 
 
 def test_every_survey_query_name_is_implemented():
@@ -32,3 +35,13 @@ def test_entry_contract_exposes_registries():
     spec.loader.exec_module(mod)
     assert set(mod.queries()) == set(QUERIES)
     assert set(mod.oracle_sql()) == set(ORACLES)
+    # queries() is the driver's verify schedule: oracle queries by oldest
+    # green in plans/verified.json, then the rows-only queries
+    order = list(mod.queries())
+    assert sorted(order) == sorted(QUERIES)
+    verified = load_verified()
+    assert set(verified) == set(ORACLES)
+    greens = [verified[n]["green"] for n in order if n in verified]
+    assert greens == sorted(greens)
+    rows_only = set(QUERIES) - set(ORACLES)
+    assert set(order[len(order) - len(rows_only):]) == rows_only

@@ -7,8 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from telecom_competitor_analysis_spark.plans.queries import QUERIES
 from telecom_competitor_analysis_spark.plans.queries_ext import (
-    EXT_QUERIES,
     SEMDEDUP_PLANES_EXPR,
     SEMDEDUP_TARGET_BUCKET,
 )
@@ -44,7 +44,7 @@ def test_plane_rule_matches_bitlength_and_scales(spark):
 
 
 def test_semdedup_scaled_buckets_and_keep_lowest(spark, sf_dir):
-    res = EXT_QUERIES["q_semdedup_scaled"](spark, sf_dir)
+    res = QUERIES["q_semdedup_scaled"](spark, sf_dir)
     rows = res.collect()
     n = len(rows)
     assert n == load_table(spark, sf_dir, "embeddings").count()
@@ -66,7 +66,7 @@ def test_semdedup_scaled_buckets_and_keep_lowest(spark, sf_dir):
 def test_semdedup_scaled_pair_join_is_bucket_keyed(spark, sf_dir):
     # the pair stage must be an equi-join on the bucket — never a
     # cartesian / nested-loop corpus² stage (pair volume ~ 128·n)
-    plan = _plan(EXT_QUERIES["q_semdedup_scaled"](spark, sf_dir))
+    plan = _plan(QUERIES["q_semdedup_scaled"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "cluster_id" in plan
@@ -78,12 +78,12 @@ def test_semdedup_scaled_assign_is_materialized_artifact(spark, sf_dir):
     # the cache dir, and the in-query count aggregate of the BUILD is
     # absent (no Exchange SinglePartition from the 1-row count in the
     # consumer plan's scan of the artifact)
-    plan = _plan(EXT_QUERIES["q_semdedup_scaled"](spark, sf_dir))
+    plan = _plan(QUERIES["q_semdedup_scaled"](spark, sf_dir))
     assert "semdedup_blocker_p16t128" in plan
 
 
 def test_edit_distance_pairs_bounds_and_plan(spark, sf_dir):
-    df = EXT_QUERIES["q_edit_distance_pairs"](spark, sf_dir)
+    df = QUERIES["q_edit_distance_pairs"](spark, sf_dir)
     plan = _plan(df)
     # verify runs on the bounded LSH candidate set — no pair stage of
     # its own, no nested loop; the distance is the built-in JVM
@@ -100,7 +100,7 @@ def test_edit_distance_pairs_bounds_and_plan(spark, sf_dir):
 
 def test_kcore_counts_monotone_nonincreasing(spark, sf_dir):
     rows = sorted(
-        EXT_QUERIES["q_kcore"](spark, sf_dir).collect(),
+        QUERIES["q_kcore"](spark, sf_dir).collect(),
         key=lambda r: r.round,
     )
     assert [r.round for r in rows] == [1, 2, 3]
@@ -111,7 +111,7 @@ def test_kcore_counts_monotone_nonincreasing(spark, sf_dir):
 
 
 def test_l_diversity_bounds(spark, sf_dir):
-    r = EXT_QUERIES["q_l_diversity"](spark, sf_dir).collect()[0]
+    r = QUERIES["q_l_diversity"](spark, sf_dir).collect()[0]
     assert r.n_classes >= 1
     assert 1 <= r.min_l_diversity <= 5  # 5 market segments exist
     assert r.n_risky_classes <= r.n_classes
@@ -119,7 +119,7 @@ def test_l_diversity_bounds(spark, sf_dir):
 
 
 def test_chrf_scores_in_range(spark, sf_dir):
-    rows = EXT_QUERIES["q_chrf"](spark, sf_dir).collect()
+    rows = QUERIES["q_chrf"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert 0 <= r.f1_micro <= 1_000_000
@@ -145,13 +145,13 @@ def test_band_tuning_grid_monotone_in_rows_per_band(spark, sf_dir):
     # and the declared query orders expected recall the same way
     rows = {
         (r.bands, r.rows_per_band): r.expected_recall_micro
-        for r in EXT_QUERIES["q_band_tuning"](spark, sf_dir).collect()
+        for r in QUERIES["q_band_tuning"](spark, sf_dir).collect()
     }
     assert rows[(16, 1)] >= rows[(8, 2)] >= rows[(4, 4)] >= rows[(2, 8)]
 
 
 def test_length_buckets_capacity_bounds(spark, sf_dir):
-    rows = EXT_QUERIES["q_length_buckets"](spark, sf_dir).collect()
+    rows = QUERIES["q_length_buckets"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r.capacity == r.n_docs * r.pad_to
@@ -160,7 +160,7 @@ def test_length_buckets_capacity_bounds(spark, sf_dir):
 
 
 def test_frame_dedup_no_pair_stage(spark, sf_dir):
-    df = EXT_QUERIES["q_frame_dedup"](spark, sf_dir)
+    df = QUERIES["q_frame_dedup"](spark, sf_dir)
     plan = _plan(df)
     assert "CartesianProduct" not in plan
     assert "md5" in plan
@@ -170,7 +170,7 @@ def test_frame_dedup_no_pair_stage(spark, sf_dir):
 
 
 def test_candidate_precision_bounds(spark, sf_dir):
-    rows = EXT_QUERIES["q_candidate_precision"](spark, sf_dir).collect()
+    rows = QUERIES["q_candidate_precision"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert 0 <= r.agree_quarters <= 4
@@ -198,19 +198,19 @@ def test_group_kfold_no_pair_straddles_folds(spark, sf_dir):
     for p in pairs.collect():
         assert fold[p.id_a] == fold[p.id_b]
     # and the declared rollup accounts for every doc exactly once
-    rows = EXT_QUERIES["q_group_kfold"](spark, sf_dir).collect()
+    rows = QUERIES["q_group_kfold"](spark, sf_dir).collect()
     assert sum(r.n_docs for r in rows) == docs.count()
     assert all(0 <= r.fold <= 4 for r in rows)
 
 
 def test_assortativity_in_range(spark, sf_dir):
-    r = EXT_QUERIES["q_assortativity"](spark, sf_dir).collect()[0]
+    r = QUERIES["q_assortativity"](spark, sf_dir).collect()[0]
     assert -1_000_000 <= r.assortativity_micro <= 1_000_000
     assert r.n_directed_edges % 2 == 0  # both orientations present
 
 
 def test_nprobe_sweep_recall_monotone_per_query(spark, sf_dir):
-    rows = EXT_QUERIES["q_nprobe_sweep"](spark, sf_dir).collect()
+    rows = QUERIES["q_nprobe_sweep"](spark, sf_dir).collect()
     by_q = {}
     for r in rows:
         by_q.setdefault(r.query_id, {})[r.nprobe] = r.recall_micro
@@ -226,7 +226,7 @@ def test_mi_lang_source_cells_cover_corpus(spark, sf_dir):
         load_table as lt,
     )
 
-    rows = EXT_QUERIES["q_mi_lang_source"](spark, sf_dir).collect()
+    rows = QUERIES["q_mi_lang_source"](spark, sf_dir).collect()
     n = lt(spark, sf_dir, "documents").count()
     assert sum(r.n_xy for r in rows) == n
     import math
@@ -237,7 +237,7 @@ def test_mi_lang_source_cells_cover_corpus(spark, sf_dir):
 
 
 def test_event_transitions_rows_normalize(spark, sf_dir):
-    rows = EXT_QUERIES["q_event_transitions"](spark, sf_dir).collect()
+    rows = QUERIES["q_event_transitions"](spark, sf_dir).collect()
     assert rows
     by_src = {}
     for r in rows:
@@ -253,7 +253,7 @@ def test_knn_hubness_accounts_every_vector(spark, sf_dir):
         load_table as lt,
     )
 
-    rows = EXT_QUERIES["q_knn_hubness"](spark, sf_dir).collect()
+    rows = QUERIES["q_knn_hubness"](spark, sf_dir).collect()
     n = lt(spark, sf_dir, "embeddings").count()
     assert sum(r.n_vectors for r in rows) == n
     assert all(r.k_occurrence >= 0 for r in rows)
@@ -266,7 +266,7 @@ def test_knn_hubness_no_broadcast_of_corpus_queries(spark, sf_dir):
     # nested loop over corpus-sized sides. The only nested-loop joins
     # allowed are the Cross combines of the 1-row corpus-count that
     # sizes the scaled blocker (the renormalizer pattern).
-    plan = _plan(EXT_QUERIES["q_knn_hubness"](spark, sf_dir))
+    plan = _plan(QUERIES["q_knn_hubness"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     import re
 
@@ -282,7 +282,7 @@ def test_knn_hubness_no_broadcast_of_corpus_queries(spark, sf_dir):
 
 
 def test_cluster_purity_bounds(spark, sf_dir):
-    rows = EXT_QUERIES["q_cluster_purity"](spark, sf_dir).collect()
+    rows = QUERIES["q_cluster_purity"](spark, sf_dir).collect()
     assert len(rows) == 8
     for r in rows:
         assert 1 <= r.top_count <= r.n_vectors
@@ -291,7 +291,7 @@ def test_cluster_purity_bounds(spark, sf_dir):
 
 
 def test_heaps_fit_checkpoints_and_beta_range(spark, sf_dir):
-    r = EXT_QUERIES["q_heaps_fit"](spark, sf_dir).collect()[0]
+    r = QUERIES["q_heaps_fit"](spark, sf_dir).collect()[0]
     # checkpoints are bin-length buckets: bounded by log2(max doc id)
     assert 2 <= r.n_points <= 64
     # beta in [0, 1]: 0 = saturated vocab (this synthetic corpus is
@@ -300,7 +300,7 @@ def test_heaps_fit_checkpoints_and_beta_range(spark, sf_dir):
 
 
 def test_js_divergence_bounds_and_symmetry_shape(spark, sf_dir):
-    r = EXT_QUERIES["q_js_divergence"](spark, sf_dir).collect()[0]
+    r = QUERIES["q_js_divergence"](spark, sf_dir).collect()[0]
     # 0 <= JS <= ln 2 (693147 micro); halves of one corpus sit near 0
     assert 0 <= r.js_micro <= 693148
     assert r.js_micro == (r.kl_p_micro + r.kl_q_micro) // 2
@@ -308,7 +308,7 @@ def test_js_divergence_bounds_and_symmetry_shape(spark, sf_dir):
 
 
 def test_gini_bounds(spark, sf_dir):
-    r = EXT_QUERIES["q_gini_concentration"](spark, sf_dir).collect()[0]
+    r = QUERIES["q_gini_concentration"](spark, sf_dir).collect()[0]
     # discrete Gini with the truncating-division form can dip a hair
     # under 0 on perfectly balanced data; bound with the 1/n slack
     assert -1_000_000 // r.n_sources <= r.gini_micro < 1_000_000

@@ -28,7 +28,7 @@ All pure DataFrame ops — no UDFs, everything whole-stage-codegen'd.
 from __future__ import annotations
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from telecom_competitor_analysis_spark.functions.text import words
@@ -40,16 +40,9 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     """Small inputs arrive as one parquet split, serializing the
     compute-heavy shingle/hash stages onto one core (measured: 9.7s → ~1s
     for the minhash signature at sf0.1). Round-robin repartition up to the
-    session's parallelism when the scan is under-split.
-
-    Gated on ``spark.graft.ensureParallelism`` (default true): the probe
-    reads ``df.rdd.getNumPartitions()``, which forces an RDD-conversion
-    analysis of the plan. Cheap locally, needless on a real cluster where
-    a 100 TB scan is always well-split — set the conf to ``false`` there
-    and the function is a true no-op (no probe, no shuffle)."""
+    session's parallelism when the scan is under-split; a well-split scan
+    is returned unchanged."""
     sess = df.sparkSession
-    if sess.conf.get("spark.graft.ensureParallelism", "true") != "true":
-        return df
     target = int(sess.conf.get("spark.sql.shuffle.partitions", "32"))
     if df.rdd.getNumPartitions() < max(2, target // 2):
         return df.repartition(target)
@@ -75,61 +68,31 @@ def exact_dedup_groups(
     )
 
 
-def shingles(text: Column, w: int = 3) -> Column:
-    """w-word shingles as an array (space-joined windows). Empty/short
-    docs yield an empty array."""
-    arr = words(F.trim(text))
-    n = F.size(arr)
-    idx = F.sequence(F.lit(0), F.greatest(n - w, F.lit(-1)))
-    return F.when(
-        n >= w,
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(arr, (i + j + 1).cast("int")) for j in range(w)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def shingle_rows(
     df: DataFrame, id_col: str, text_col: str, w: int = 3
 ) -> DataFrame:
-    """(id, shingle) rows via posexplode + window lead — the codegen'd
-    formulation. The interpreted higher-order-function variant (shingles()
-    + explode) allocated heavily and ran 2-6× slower with GC-driven
-    variance; this one is a stable single window pass whose doc-id
-    partitioning is reused by any downstream per-doc groupBy (no second
-    shuffle)."""
-    from pyspark.sql import Window
-
-    win = Window.partitionBy(id_col).orderBy("pos")
-    toks = df.select(
-        F.col(id_col),
-        F.posexplode(words(F.trim(F.col(text_col)))).alias("pos", "w"),
+    """(id, word) rows, one per w-word shingle: ``positional_ngrams``
+    without the position."""
+    return positional_ngrams(df, id_col, text_col, w).select(
+        F.col(id_col), F.col("gram").alias("word")
     )
-    parts = ["w"] + [F.lead("w", j).over(win) for j in range(1, w)]
-    guard = F.lead("w", w - 1).over(win)
-    return toks.select(
-        F.col(id_col),
-        F.concat_ws(" ", *parts).alias("word"),
-        guard.alias("__guard"),
-    ).filter(F.col("__guard").isNotNull()).drop("__guard")
 
 
 def positional_ngrams(
     df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
-    """(id, pos, gram) rows — ``shingle_rows`` with the gram's START
-    POSITION kept. The ONE shared stage behind every positional
-    consumer (phrase retrieval, duplicate-span audit/removal): same
-    posexplode + lead-window formulation, same doc-id partitioning
-    reused by downstream per-doc work (r7 review: this block was
-    copy-pasted three times before being factored here — change the
-    gram shape HERE and every consumer plus its oracle CTE constant
-    follows)."""
-    from pyspark.sql import Window
+    """(id, pos, gram) rows — every n-word window with its START
+    POSITION. The ONE n-gram window: ``shingle_rows`` and every
+    positional consumer (phrase retrieval, duplicate-span audit/removal)
+    select from it, so a change to the gram shape here reaches every
+    consumer plus its oracle CTE constant.
 
+    posexplode + window lead is the codegen'd formulation. The
+    interpreted higher-order-function variant (transform over a
+    sequence + explode) allocated heavily and ran 2-6× slower with
+    GC-driven variance; this one is a stable single window pass whose
+    doc-id partitioning is reused by any downstream per-doc groupBy (no
+    second shuffle)."""
     win = Window.partitionBy(id_col).orderBy("pos")
     toks = df.select(
         F.col(id_col),
@@ -185,19 +148,9 @@ def minhash_signature(
     return tokens.groupBy(id_col).agg(*aggs)
 
 
-def banded_signatures(
-    signatures: DataFrame,
-    id_col: str,
-    n_hashes: int = 4,
-    bands: int = 2,
-) -> DataFrame:
-    """(id, band_idx, band_key) rows — the banding stage of LSH, the
-    ONE definition shared by ``lsh_candidate_pairs`` (which pairs
-    within buckets) and the band-health observability query
-    (``q_lsh_band_stats``, which audits bucket-size distribution and
-    predicted candidate volume without materializing any pair). Band b
-    covers signature components h[b·r .. b·r + r), r = n_hashes/bands;
-    the band key is md5 over the '|'-joined components."""
+def _minhash_band_keys(n_hashes: int, bands: int) -> list:
+    """Band b covers signature components h[b·r .. b·r + r), r =
+    n_hashes/bands; its key is md5 over the '|'-joined components."""
     if bands <= 0 or n_hashes % bands:
         raise ValueError(
             f"n_hashes ({n_hashes}) must divide evenly into bands ({bands}):"
@@ -205,139 +158,67 @@ def banded_signatures(
             " from every band key, weakening the LSH collision guarantee"
         )
     rows_per_band = n_hashes // bands
-    return signatures.select(
-        F.col(id_col),
+    return [
+        F.md5(
+            F.concat_ws(
+                "|",
+                *[
+                    F.col(f"h{b * rows_per_band + r}")
+                    for r in range(rows_per_band)
+                ],
+            )
+        )
+        for b in range(bands)
+    ]
+
+
+def _band_explode(df: DataFrame, cols: list, keys: list) -> DataFrame:
+    """(cols..., band_idx, band_key) rows, one per band: band b is keyed
+    by ``keys[b]``."""
+    banded = df.select(
+        *cols,
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.col(f"h{b * rows_per_band + r}")
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("band_key"),
-                    )
-                    for b in range(bands)
+                    F.struct(F.lit(b).alias("band_idx"), key.alias("band_key"))
+                    for b, key in enumerate(keys)
                 ]
             )
         ).alias("band"),
-    ).select(id_col, "band.band_idx", "band.band_key")
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str,
-    n_hashes: int = 4,
-    bands: int = 2,
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """Band the signature (rows = n_hashes/bands per band), hash each band,
-    self-join on (band_idx, band_key) → candidate pairs (a < b).
-    Pair volume is Σ bucket² — bounded by bucket sizes, not corpus size.
-
-    ``max_bucket_size`` drops degenerate mega-buckets before pairing (the
-    CCNet/SlimPajama hygiene step): a bucket shared by m docs emits m²/2
-    pairs, so one boilerplate-driven bucket of 10⁶ docs would emit ~5·10¹¹
-    pairs and sink the job. Docs in a dropped bucket can still pair through
-    their other bands; a corpus-scale bucket means near-identical
-    boilerplate, which exact dedup already collapses upstream."""
-    banded = banded_signatures(signatures, id_col, n_hashes, bands)
-    # Pairs via per-bucket combination explode (NOT a self-join: a self-join
-    # would recompute the whole signature pipeline for both sides — measured
-    # 2× cost — and shuffle twice). One groupBy shuffle; bucket member lists
-    # are bounded by max_bucket_size, so no single reducer ever holds an
-    # unbounded list or emits an unbounded pair explosion.
-    ids = F.array_sort(F.collect_list(F.col(id_col)))
-    pairs = (
-        banded.groupBy("band_idx", "band_key")
-        .agg(ids.alias("ids"))
-        .filter(
-            (F.size("ids") > 1) & (F.size("ids") <= F.lit(max_bucket_size))
-        )
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ids"),
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("ids"),
-                                (i + 2).cast("int"),
-                                F.size(F.col("ids")),
-                            ),
-                            lambda y: F.struct(
-                                x.alias("id_a"), y.alias("id_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .distinct()
     )
-    return pairs
-
-
-def minhash_est_pairs(
-    signatures: DataFrame,
-    id_col: str,
-    n_hashes: int = 4,
-    bands: int = 2,
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """LSH candidate pairs WITH the signature-agreement Jaccard estimate
-    (est = fraction of MinHash components that agree), computed map-side.
-
-    Same banding/bucketing as ``lsh_candidate_pairs``, but the bucket
-    member structs carry the signature array, so the estimate is a pure
-    expression over the exploded pair rows — no join back to the
-    signature table (which would re-evaluate the signature aggregation
-    for each side and add two shuffle joins; the pattern
-    ``simhash_candidate_pairs`` uses for the same reason). Returns
-    (id_a, id_b, est_jaccard)."""
-    if bands <= 0 or n_hashes % bands:
-        raise ValueError(
-            f"n_hashes ({n_hashes}) must divide evenly into bands ({bands}):"
-            " a remainder would silently exclude trailing hash components"
-            " from every band key, weakening the LSH collision guarantee"
-        )
-    rows_per_band = n_hashes // bands
-    hs = F.array(*[F.col(f"h{i}") for i in range(n_hashes)])
-    banded = signatures.select(
-        F.col(id_col).alias("id"),
-        hs.alias("hs"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.col(f"h{b * rows_per_band + r}")
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("id", "hs", "band.band_idx", "band.band_key")
-    members = F.array_sort(
-        F.collect_list(F.struct(F.col("id"), F.col("hs")))
+    return banded.select(
+        *banded.columns[:-1], "band.band_idx", "band.band_key"
     )
-    pairs = (
+
+
+def _bucket_pairs(
+    banded: DataFrame,
+    id_col: str,
+    max_bucket_size: int,
+    payload: str | None = None,
+) -> DataFrame:
+    """Candidate pairs (a < b) of docs sharing a (band_idx, band_key)
+    bucket: (id_a, id_b), or (id_a, {payload}_a, id_b, {payload}_b) when
+    a payload column rides along so the verify stage needs no join back.
+
+    Per-bucket combination explode, NOT a self-join: a self-join would
+    recompute the whole signature pipeline for both sides (measured 2×
+    cost) and shuffle twice. One groupBy shuffle; buckets of more than
+    ``max_bucket_size`` members are dropped before pairing, so no single
+    reducer ever holds an unbounded list or emits an unbounded pair
+    explosion."""
+    if payload is None:
+        member = F.col(id_col)
+        fields = lambda m, s: [m.alias(f"id_{s}")]  # noqa: E731
+    else:
+        member = F.struct(F.col(id_col), F.col(payload))
+        fields = lambda m, s: [  # noqa: E731
+            m[id_col].alias(f"id_{s}"),
+            m[payload].alias(f"{payload}_{s}"),
+        ]
+    return (
         banded.groupBy("band_idx", "band_key")
-        .agg(members.alias("ms"))
+        .agg(F.array_sort(F.collect_list(member)).alias("ms"))
         .filter(
             (F.size("ms") > 1) & (F.size("ms") <= F.lit(max_bucket_size))
         )
@@ -353,19 +234,79 @@ def minhash_est_pairs(
                                 F.size(F.col("ms")),
                             ),
                             lambda y: F.struct(
-                                x["id"].alias("id_a"),
-                                x["hs"].alias("hs_a"),
-                                y["id"].alias("id_b"),
-                                y["hs"].alias("hs_b"),
+                                *fields(x, "a"), *fields(y, "b")
                             ),
                         ),
                     )
                 )
             ).alias("p")
         )
-        .select("p.id_a", "p.hs_a", "p.id_b", "p.hs_b")
+        .select("p.*")
         .distinct()
     )
+
+
+def banded_signatures(
+    signatures: DataFrame,
+    id_col: str,
+    n_hashes: int = 4,
+    bands: int = 2,
+) -> DataFrame:
+    """(id, band_idx, band_key) rows — the banding stage of LSH, shared
+    by ``lsh_candidate_pairs`` (which pairs within buckets) and the
+    band-health observability query (``q_lsh_band_stats``, which audits
+    bucket-size distribution and predicted candidate volume without
+    materializing any pair)."""
+    return _band_explode(
+        signatures, [F.col(id_col)], _minhash_band_keys(n_hashes, bands)
+    )
+
+
+def lsh_candidate_pairs(
+    signatures: DataFrame,
+    id_col: str,
+    n_hashes: int = 4,
+    bands: int = 2,
+    max_bucket_size: int = 1000,
+) -> DataFrame:
+    """Band the signature (rows = n_hashes/bands per band), hash each band,
+    pair the docs of each (band_idx, band_key) bucket → candidate pairs
+    (a < b). Pair volume is Σ bucket² — bounded by bucket sizes, not
+    corpus size.
+
+    ``max_bucket_size`` drops degenerate mega-buckets before pairing (the
+    CCNet/SlimPajama hygiene step): a bucket shared by m docs emits m²/2
+    pairs, so one boilerplate-driven bucket of 10⁶ docs would emit ~5·10¹¹
+    pairs and sink the job. Docs in a dropped bucket can still pair through
+    their other bands; a corpus-scale bucket means near-identical
+    boilerplate, which exact dedup already collapses upstream."""
+    banded = banded_signatures(signatures, id_col, n_hashes, bands)
+    return _bucket_pairs(banded, id_col, max_bucket_size)
+
+
+def minhash_est_pairs(
+    signatures: DataFrame,
+    id_col: str,
+    n_hashes: int = 4,
+    bands: int = 2,
+    max_bucket_size: int = 1000,
+) -> DataFrame:
+    """LSH candidate pairs WITH the signature-agreement Jaccard estimate
+    (est = fraction of MinHash components that agree), computed map-side.
+
+    Same banding/bucketing as ``lsh_candidate_pairs``, but the bucket
+    members carry the signature array, so the estimate is a pure
+    expression over the exploded pair rows — no join back to the
+    signature table (which would re-evaluate the signature aggregation
+    for each side and add two shuffle joins; the pattern
+    ``simhash_candidate_pairs`` uses for the same reason). Returns
+    (id_a, id_b, est_jaccard)."""
+    keys = _minhash_band_keys(n_hashes, bands)
+    hs = F.array(*[F.col(f"h{i}") for i in range(n_hashes)])
+    banded = _band_explode(
+        signatures, [F.col(id_col).alias("id"), hs.alias("hs")], keys
+    )
+    pairs = _bucket_pairs(banded, "id", max_bucket_size, payload="hs")
     agree = sum(
         F.when(F.col("hs_a")[i] == F.col("hs_b")[i], 1).otherwise(0)
         for i in range(n_hashes)
@@ -487,57 +428,13 @@ def simhash_candidate_pairs(
             for c in range(n_chunks)
         ]
     )
-    banded = signatures.select(
-        F.col(id_col).alias("id"),
-        chunks.alias("ks"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.substring(
-                            F.col(sig_col), b * width + 1, width
-                        ).alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("id", "ks", "band.band_idx", "band.band_key")
-    members = F.array_sort(
-        F.collect_list(F.struct(F.col("id"), F.col("ks")))
+    keys = [
+        F.substring(F.col(sig_col), b * width + 1, width) for b in range(bands)
+    ]
+    banded = _band_explode(
+        signatures, [F.col(id_col).alias("id"), chunks.alias("ks")], keys
     )
-    pairs = (
-        banded.groupBy("band_idx", "band_key")
-        .agg(members.alias("ms"))
-        .filter(
-            (F.size("ms") > 1) & (F.size("ms") <= F.lit(max_bucket_size))
-        )
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ms"),
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("ms"),
-                                (i + 2).cast("int"),
-                                F.size(F.col("ms")),
-                            ),
-                            lambda y: F.struct(
-                                x["id"].alias("id_a"),
-                                x["ks"].alias("ks_a"),
-                                y["id"].alias("id_b"),
-                                y["ks"].alias("ks_b"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.ks_a", "p.id_b", "p.ks_b")
-        .distinct()
-    )
+    pairs = _bucket_pairs(banded, "id", max_bucket_size, payload="ks")
     hamming = sum(
         F.bit_count(
             F.col("ks_a")[c].bitwiseXOR(F.col("ks_b")[c])
@@ -663,26 +560,7 @@ def shingle_jaccard_pairs(
     so the Jaccard stays exact over the filtered shingle space (both the
     numerator and the denominators exclude stop-shingles — no bias, just
     a smaller, discriminative feature set)."""
-    toks = (
-        shingle_rows(_ensure_parallelism(df), id_col, text_col, w)
-        .select(F.col(id_col).alias("id"), F.col("word").alias("sh"))
-        .distinct()
-    )
-    # df-cap as a window count over partitionBy(sh): ONE shuffle on the
-    # shingle — the same key the inverted-index join hashes on, so the
-    # partitioning is produced once and reused — where a groupBy+semi-join
-    # would re-run the whole shingle pipeline for the count side (measured
-    # 2.4× slower at sf0.1). A hot shingle's rows do land in one window
-    # partition, but that is the identical distribution the join itself
-    # would have had, and the filter drops them before any pairing.
-    from pyspark.sql import Window
-
-    w_sh = Window.partitionBy("sh")
-    toks = (
-        toks.withColumn("__df", F.count(F.lit(1)).over(w_sh))
-        .filter(F.col("__df") <= F.lit(max_df))
-        .drop("__df")
-    )
+    toks = _shingle_universe(df, id_col, text_col, w, max_df)
     # r12 optimization (guide §5): the capped universe feeds FOUR
     # consumers (both inverted-index join sides + the size table,
     # itself joined twice), and each re-derivation pays the shingle
@@ -700,20 +578,72 @@ def shingle_jaccard_pairs(
     sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = toks.alias("a")
     b = toks.alias("b")
-    shared = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared"))
+    matches = a.join(
+        b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id"))
     )
+    return _jaccard_pairs(matches, sizes, sizes, threshold)
+
+
+def _shingle_universe(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    w: int,
+    max_df: int | None = None,
+) -> DataFrame:
+    """Distinct (id, sh) w-shingle rows of ``df``; with ``max_df``, the
+    shingles of more than ``max_df`` documents are dropped.
+
+    The df cap is a window count over partitionBy(sh): ONE shuffle on the
+    shingle — the same key the inverted-index join hashes on, so the
+    partitioning is produced once and reused — where a groupBy+semi-join
+    would re-run the whole shingle pipeline for the count side (measured
+    2.4× slower at sf0.1). A hot shingle's rows do land in one window
+    partition, but that is the identical distribution the join itself
+    would have had, and the filter drops them before any pairing."""
+    toks = (
+        shingle_rows(_ensure_parallelism(df), id_col, text_col, w)
+        .select(F.col(id_col).alias("id"), F.col("word").alias("sh"))
+        .distinct()
+    )
+    if max_df is None:
+        return toks
+    return (
+        toks.withColumn(
+            "__df", F.count(F.lit(1)).over(Window.partitionBy("sh"))
+        )
+        .filter(F.col("__df") <= F.lit(max_df))
+        .drop("__df")
+    )
+
+
+def _jaccard_pairs(
+    matches: DataFrame,
+    sizes_a: DataFrame,
+    sizes_b: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """The shared-count → Jaccard tail of every shingle-pair form.
+    ``matches`` = one row per shingle two docs share, its sides aliased
+    ``a`` and ``b``; ``sizes_a``/``sizes_b`` = (id, n_sh) per side.
+    Returns (id_a, id_b, n_shared, n_a, n_b, jaccard) with jaccard ≥
+    ``threshold``."""
+    shared = matches.groupBy(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
+    ).agg(F.count(F.lit(1)).alias("n_shared"))
     # sizes is corpus-cardinality (one row per doc) — NOT broadcast-able at
     # scale; shuffle-join it and let AQE pick the strategy.
-    out = (
+    return (
         shared.join(
-            sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"),
+            sizes_a.withColumnRenamed("id", "id_a").withColumnRenamed(
+                "n_sh", "n_a"
+            ),
             on="id_a",
         )
         .join(
-            sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"),
+            sizes_b.withColumnRenamed("id", "id_b").withColumnRenamed(
+                "n_sh", "n_b"
+            ),
             on="id_b",
         )
         .withColumn(
@@ -722,8 +652,8 @@ def shingle_jaccard_pairs(
             / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
         )
         .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "n_shared", "n_a", "n_b", "jaccard")
     )
-    return out.select("id_a", "id_b", "n_shared", "n_a", "n_b", "jaccard")
 
 
 def kmv_distinct(
@@ -757,9 +687,7 @@ def kmv_distinct(
         .groupBy(group_col, "__h")
         .agg(F.lit(1).alias("__one"))
     )
-    from pyspark.sql import Window as _W
-
-    w = _W.partitionBy(group_col).orderBy("__h")
+    w = Window.partitionBy(group_col).orderBy("__h")
     ranked = hashes.withColumn("__rn", F.row_number().over(w))
     # u = first 13 hex nibbles as a fraction of 16^13 — exact integer
     # arithmetic then one constant division, identical in any engine
@@ -812,18 +740,7 @@ def build_shingle_index(
     shingle, the join key every probe batch hashes on) and every
     incremental batch reads only the buckets its own shingles hash to;
     the keep-list's documents are never re-tokenized again."""
-    toks = (
-        shingle_rows(_ensure_parallelism(keepers), id_col, text_col, w)
-        .select(F.col(id_col).alias("id"), F.col("word").alias("sh"))
-        .distinct()
-    )
-    from pyspark.sql import Window as _W
-
-    toks = (
-        toks.withColumn("__df", F.count(F.lit(1)).over(_W.partitionBy("sh")))
-        .filter(F.col("__df") <= F.lit(max_df))
-        .drop("__df")
-    )
+    toks = _shingle_universe(keepers, id_col, text_col, w, max_df)
     # one narrow pipeline feeds both writes; persist would pin the
     # exchange (NOTES r5) — the double scan is the write-side cost paid
     # once per index rebuild
@@ -858,36 +775,12 @@ def near_dups_against_index(
     shared-universe recompute exactly (pinned by test)."""
     postings = spark.read.parquet(f"{index_path}/postings")
     sizes = spark.read.parquet(f"{index_path}/sizes")
-    btoks = (
-        shingle_rows(_ensure_parallelism(batch), id_col, text_col, w)
-        .select(F.col(id_col).alias("id"), F.col("word").alias("sh"))
-        .distinct()
+    btoks = _shingle_universe(batch, id_col, text_col, w)
+    b_sizes = btoks.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
+    matches = btoks.alias("a").join(
+        postings.alias("b"), F.col("a.sh") == F.col("b.sh")
     )
-    b_sizes = btoks.groupBy("id").agg(F.count(F.lit(1)).alias("n_a"))
-    shared = (
-        btoks.alias("a")
-        .join(postings.alias("b"), F.col("a.sh") == F.col("b.sh"))
-        .groupBy(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    return (
-        shared.join(b_sizes.withColumnRenamed("id", "id_a"), on="id_a")
-        .join(
-            sizes.withColumnRenamed("id", "id_b").withColumnRenamed(
-                "n_sh", "n_b"
-            ),
-            on="id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_shared").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "n_shared", "n_a", "n_b", "jaccard")
-    )
+    return _jaccard_pairs(matches, b_sizes, sizes, threshold)
 
 
 def shingle_jaccard_pairs_between(
@@ -917,19 +810,7 @@ def shingle_jaccard_pairs_between(
     union = probe.select(F.col(id_col), F.col(text_col)).unionByName(
         build.select(F.col(id_col), F.col(text_col))
     )
-    toks = (
-        shingle_rows(_ensure_parallelism(union), id_col, text_col, w)
-        .select(F.col(id_col).alias("id"), F.col("word").alias("sh"))
-        .distinct()
-    )
-    from pyspark.sql import Window
-
-    w_sh = Window.partitionBy("sh")
-    toks = (
-        toks.withColumn("__df", F.count(F.lit(1)).over(w_sh))
-        .filter(F.col("__df") <= F.lit(max_df))
-        .drop("__df")
-    )
+    toks = _shingle_universe(union, id_col, text_col, w, max_df)
     # r12: NO universe cache here — this asymmetric form exists for the
     # composed incremental path, where the cached subtree was measured
     # 50% slower (see shingle_jaccard_pairs.cache_universe).
@@ -938,35 +819,10 @@ def shingle_jaccard_pairs_between(
     build_ids = build.select(F.col(id_col).alias("id"))
     a = toks.join(probe_ids, on="id", how="left_semi").alias("a")
     b = toks.join(build_ids, on="id", how="left_semi").alias("b")
-    shared = (
-        a.join(b, F.col("a.sh") == F.col("b.sh"))
-        .filter(F.col("a.id") != F.col("b.id"))
-        .groupBy(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
+    matches = a.join(b, F.col("a.sh") == F.col("b.sh")).filter(
+        F.col("a.id") != F.col("b.id")
     )
-    out = (
-        shared.join(
-            sizes.withColumnRenamed("id", "id_a").withColumnRenamed(
-                "n_sh", "n_a"
-            ),
-            on="id_a",
-        )
-        .join(
-            sizes.withColumnRenamed("id", "id_b").withColumnRenamed(
-                "n_sh", "n_b"
-            ),
-            on="id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_shared").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return out.select("id_a", "id_b", "n_shared", "n_a", "n_b", "jaccard")
+    return _jaccard_pairs(matches, sizes, sizes, threshold)
 
 
 def paragraph_dedup(

@@ -108,6 +108,41 @@ l2_norm = _norm
 # not on interpreted EVAL time.
 
 
+def _topk(
+    pairs: DataFrame,
+    k: int,
+    cos: Column | None = None,
+    prev: DataFrame | None = None,
+    keep_cos: bool = False,
+) -> DataFrame:
+    """The top-k tail of every cosine search: drop self-pairs, score
+    ``cos`` (default cosine(q_vec, c_vec)) per (query_id, neighbor_id)
+    pair, and keep each query's first ``k`` by ``cos desc, neighbor_id
+    asc`` — README's tie-break rule, held here only. Returns (query_id,
+    neighbor_id, rank). ``incremental_topk`` sets ``keep_cos``: the fresh
+    scores are ranked together with its kept ``prev`` rows, and the
+    result is (query_id, neighbor_id, cos)."""
+    if cos is None:
+        cos = cosine(F.col("q_vec"), F.col("c_vec"))
+    scored = pairs.filter(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id", "neighbor_id", cos.alias("cos")
+    )
+    if prev is not None:
+        scored = prev.select("query_id", "neighbor_id", "cos").unionByName(
+            scored
+        )
+    rank = "__rn" if keep_cos else "rank"
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("neighbor_id").asc()
+    )
+    top = scored.withColumn(rank, F.row_number().over(w)).filter(
+        F.col(rank) <= k
+    )
+    return top.drop(rank) if keep_cos else top.select(
+        "query_id", "neighbor_id", "rank"
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -127,26 +162,10 @@ def cosine_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
     ).withColumn("__cn", _norm(F.col("c_vec")))
-    scored = (
-        c.crossJoin(q)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("__qn") * F.col("__cn"))
-            ).alias("cos"),
-        )
+    cos = _dot(F.col("q_vec"), F.col("c_vec")) / (
+        F.col("__qn") * F.col("__cn")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _topk(c.crossJoin(q), k, cos)
 
 
 def hyperplane_sign_bucket(
@@ -255,23 +274,7 @@ def ivf_topk(
             "q_vec",
         )
     )
-    scored = (
-        c.join(q, on="bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("q_vec"), F.col("c_vec")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _topk(c.join(q, on="bucket"), k)
 
 
 def incremental_topk(
@@ -296,33 +299,10 @@ def incremental_topk(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
         )
     )
-    fresh = (
-        new_corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-        )
-        .crossJoin(q)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("q_vec"), F.col("c_vec")).alias("cos"),
-        )
-    )
-    pool = (
-        fresh
-        if prev_scored is None
-        else prev_scored.select("query_id", "neighbor_id", "cos").unionByName(
-            fresh
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pool.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    fresh = new_corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+    ).crossJoin(q)
+    return _topk(fresh, k, prev=prev_scored, keep_cos=True)
 
 
 def lsh_bucketed_topk(
@@ -355,23 +335,7 @@ def lsh_bucketed_topk(
         ),
         "c_vec",
     )
-    scored = (
-        c.join(q, on="bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("q_vec"), F.col("c_vec")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _topk(c.join(q, on="bucket"), k)
 
 
 def kmeans_assign(
@@ -872,23 +836,7 @@ def ann_against_index(
         nprobe,
         "query_id",
     )
-    scored = (
-        cand.join(F.broadcast(probes), on="bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("q_vec"), F.col("c_vec")).alias("cos"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _topk(cand.join(F.broadcast(probes), on="bucket"), k)
 
 
 # --- product quantization (PQ) -------------------------------------------
@@ -968,23 +916,8 @@ def multiprobe_lsh_topk(
     probes = qb.select(
         "query_id", "q_vec", F.explode(F.array(*flips)).alias("probe")
     )
-    scored = (
-        c.join(F.broadcast(probes), c["bucket"] == probes["probe"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("q_vec"), F.col("c_vec")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    pairs = c.join(F.broadcast(probes), c["bucket"] == probes["probe"])
+    return _topk(pairs, k)
 
 
 def kcenter_select(

@@ -24,6 +24,7 @@ from telecom_competitor_analysis_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_est_pairs,
     minhash_signature,
+    positional_ngrams,
     shingle_jaccard_pairs,
     shingle_rows,
     simhash16,
@@ -2418,8 +2419,7 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan split (one core buffering all 600k rows). The shared
     under-split guard repartitions first; interleaved A/B best-of-3:
     3.65 s -> 2.42 s, rows identical. On a well-split cluster scan the
-    guard is a no-op (spark.graft.ensureParallelism=false skips the
-    probe entirely)."""
+    guard returns its input unchanged."""
     from telecom_competitor_analysis_spark.operators.dedup import (
         _ensure_parallelism,
     )
@@ -3139,25 +3139,7 @@ def q_dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (running MAX of prior span ends, island = cumsum of gap flags) —
     all on ONE doc_id exchange shared by every window pass."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.posexplode(words(F.trim(F.col("text")))).alias("pos", "w"),
-    )
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    grams = (
-        toks.withColumn(
-            "gram",
-            F.concat_ws(
-                " ",
-                F.col("w"),
-                F.lead("w", 1).over(win),
-                F.lead("w", 2).over(win),
-            ),
-        )
-        .withColumn("__guard", F.lead("w", 2).over(win))
-        .filter(F.col("__guard").isNotNull())
-        .select("doc_id", "pos", "gram")
-    )
+    grams = positional_ngrams(docs, "doc_id", "text", n=3)
     df_tbl = (
         grams.select("doc_id", "gram")
         .distinct()
@@ -3279,10 +3261,6 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     a partial-agg per-doc rollup. At 100 TB the gram stream would come
     from a materialized positional index (the build_shingle_index
     pattern); the probe side is unchanged."""
-    from telecom_competitor_analysis_spark.operators.dedup import (
-        positional_ngrams,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     grams = positional_ngrams(docs, "doc_id", "text", n=3)
     top1 = (
@@ -3366,10 +3344,6 @@ def q_dup_span_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc collect_list (bounded by doc length — the same per-doc
     state bound as q_sequence_pack). Every shuffle is keyed by doc_id
     or a doc_id-prefixed composite."""
-    from telecom_competitor_analysis_spark.operators.dedup import (
-        positional_ngrams,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",

@@ -53,7 +53,7 @@ def get_spark(
         # pairs, shingle postings) skip both sorts. Interleaved
         # same-session A/B at sf0.1: q_bradley_terry 0.73×,
         # q_corpus_curate 0.65×, 10-query join set total −17%, no
-        # query worse than +14% (tools/probe_conf_ab.py). Env-
+        # query worse than +14% (tools/probe.py --ab). Env-
         # overridable for clusters whose build sides overflow a
         # partition (SHJ cannot spill its hash table): set
         # SPARK_GRAFT_PREFER_SMJ=true to restore the default.

@@ -24,6 +24,16 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _only_guard_exchanges(plan: str) -> bool:
+    """Every Exchange in ``plan`` is the under-split guard's round-robin
+    (operators/dedup.ensure_parallelism), which a well-split scan skips."""
+    return all(
+        "RoundRobinPartitioning" in line
+        for line in plan.splitlines()
+        if "Exchange" in line
+    )
+
+
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
     df = QUERIES["q_filter_contains"](spark, sf_dir)
     plan = df._jdf.queryExecution().toString()
@@ -132,14 +142,10 @@ def test_key_skew_topk_avoids_global_sort(spark, sf_dir):
 
 
 def test_pii_scrub_is_map_only(spark, sf_dir):
-    # pure narrow stage: zero exchanges under the cluster setting (the
-    # gated under-split round-robin is local-only; ungated presence is
-    # pinned by tests/test_wave9b.py::test_compute_bound_map_queries_...)
-    spark.conf.set("spark.graft.ensureParallelism", "false")
-    try:
-        assert "Exchange" not in _plan(QUERIES["q_pii_scrub"](spark, sf_dir))
-    finally:
-        spark.conf.unset("spark.graft.ensureParallelism")
+    # pure narrow stage: no exchange but the under-split round-robin
+    # (its presence is pinned by
+    # tests/test_wave9b.py::test_compute_bound_map_queries_...)
+    assert _only_guard_exchanges(_plan(QUERIES["q_pii_scrub"](spark, sf_dir)))
 
 
 def test_salted_join_rejects_replication_unsafe_how(spark, sf_dir):
@@ -458,17 +464,12 @@ def test_quality_classifier_is_map_only(spark, sf_dir):
     map-only projection: the per-doc score folds over the words array
     inside one codegen'd expression — NO exchange, NO explode-generate,
     NO Python stage. At 100 TB this is the difference between scan
-    speed and a corpus-scale shuffle. House rule (r9 lesson): map-only
-    assertions gate the under-split guard conf off first, so adding the
-    guard to this compute-heavy scan later can't contradict this test."""
-    spark.conf.set("spark.graft.ensureParallelism", "false")
-    try:
-        plan = _plan(QUERIES["q_quality_classifier"](spark, sf_dir))
-        assert "Exchange" not in plan
-        assert "Generate" not in plan
-        assert "Python" not in plan
-    finally:
-        spark.conf.unset("spark.graft.ensureParallelism")
+    speed and a corpus-scale shuffle. The under-split guard's
+    round-robin is the one exchange allowed: a well-split scan skips it."""
+    plan = _plan(QUERIES["q_quality_classifier"](spark, sf_dir))
+    assert _only_guard_exchanges(plan)
+    assert "Generate" not in plan
+    assert "Python" not in plan
 
 
 def test_phrase_search_partial_topk_and_broadcast_probe(spark, sf_dir):
@@ -948,19 +949,13 @@ def test_url_dedup_zero_exchange_canonicalize_partial_agg(spark, sf_dir):
 
 
 def test_line_filter_is_scan_project_filter_no_exchange(spark, sf_dir):
-    # the whole C4 line screen happens inside the row: at 100 TB (gate
-    # conf off — a big scan is always well-split) it runs at scan speed;
-    # any exchange in THAT plan is a bug. Locally the only exchange
-    # allowed is the gated under-split round-robin.
-    spark.conf.set("spark.graft.ensureParallelism", "false")
-    try:
-        plan = _plan(QUERIES["q_line_filter"](spark, sf_dir))
-        assert "Exchange" not in plan
-        assert "BatchScan" in plan or "FileScan" in plan
-    finally:
-        spark.conf.unset("spark.graft.ensureParallelism")
-    local = _plan(QUERIES["q_line_filter"](spark, sf_dir))
-    assert "Exchange hashpartitioning" not in local
+    # the whole C4 line screen happens inside the row: at 100 TB (a big
+    # scan is always well-split) it runs at scan speed. The only exchange
+    # allowed is the under-split guard's round-robin.
+    plan = _plan(QUERIES["q_line_filter"](spark, sf_dir))
+    assert _only_guard_exchanges(plan)
+    assert "BatchScan" in plan or "FileScan" in plan
+    assert "Exchange hashpartitioning" not in plan
 
 
 def test_ngram_novelty_no_pair_stage(spark, sf_dir):
@@ -1102,14 +1097,11 @@ def test_doremi_step_single_corpus_exchange(spark, sf_dir):
 
 
 def test_span_corruption_is_map_only(spark, sf_dir):
-    # the pair build is scan-speed: zero exchanges under the cluster
-    # setting (the gated under-split round-robin is local-only)
-    spark.conf.set("spark.graft.ensureParallelism", "false")
-    try:
-        plan = _plan(QUERIES["q_span_corruption"](spark, sf_dir))
-        assert "Exchange" not in plan
-    finally:
-        spark.conf.unset("spark.graft.ensureParallelism")
+    # the pair build is scan-speed: no exchange but the under-split
+    # guard's round-robin
+    assert _only_guard_exchanges(
+        _plan(QUERIES["q_span_corruption"](spark, sf_dir))
+    )
 
 
 def test_prefix_rule_match_broadcasts_rules_no_theta_join(spark, sf_dir):

@@ -13,6 +13,7 @@ from telecom_competitor_analysis_spark.operators.similarity import (
     cosine_topk,
     ivf_topk,
     lsh_bucketed_topk,
+    multiprobe_lsh_topk,
 )
 from telecom_competitor_analysis_spark.sources.readers import load_table
 
@@ -557,10 +558,6 @@ def test_multiprobe_superset_and_recall_monotone(spark, emb):
     """Multi-probe candidates must be a strict SUPERSET of the
     single-bucket LSH run per query (the own-bucket probe is always
     included), so recall@10 vs brute force can only go up."""
-    from telecom_competitor_analysis_spark.operators.similarity import (
-        multiprobe_lsh_topk,
-    )
-
     queries = emb.filter(F.col("vec_id") < 5)
     single = _topk_sets(
         lsh_bucketed_topk(emb, queries, dim=64, k=10, n_planes=4)
@@ -578,3 +575,27 @@ def test_multiprobe_superset_and_recall_monotone(spark, emb):
     # include the identity bucket (same neighbors when no flip helps)
     for qid, s in single.items():
         assert multi.get(qid), f"query {qid} lost all neighbors"
+
+
+@pytest.mark.parametrize(
+    "topk",
+    [cosine_topk, ivf_topk, lsh_bucketed_topk, multiprobe_lsh_topk],
+    ids=lambda f: f.__name__,
+)
+def test_equal_cosine_ranks_lower_neighbor_id_first(spark, topk):
+    """README's tie-break rule: neighbors with equal cosine rank by
+    ascending neighbor_id, and the cut at k keeps the lower id. Two
+    identical corpus vectors share every bucket (hyperplane or IVF
+    anchor) with the query, so every search scores both."""
+    v, w = [1.0, 2.0, 0.0, 0.5], [0.0, 0.0, 1.0, 0.0]
+    schema = "vec_id long, embedding array<float>"
+    corpus = spark.createDataFrame([(5, v), (3, v), (1, w)], schema)
+    queries = spark.createDataFrame([(100, v)], schema)
+    dim = {} if topk in (cosine_topk, ivf_topk) else {"dim": 4}
+
+    def ranked(k):
+        out = topk(corpus, queries, k=k, **dim).orderBy("rank").collect()
+        return [tuple(r) for r in out]
+
+    assert ranked(2) == [(100, 3, 1), (100, 5, 2)]
+    assert ranked(1) == [(100, 3, 1)]

@@ -1,6 +1,6 @@
 """Build an xN replication probe dataset at /tmp/sfx{N} with DISTINCT
 content (replica-tagged words, offset keys, rotated/sign-flipped
-embeddings) — generalizes make_x10.py so the ×100 probe exists too:
+embeddings): `python tools/make_xn.py 10` → /tmp/sfx10,
 `python tools/make_xn.py 100` → /tmp/sfx100.
 
 Replica 0 keeps the original rows. Embedding replicas use shift

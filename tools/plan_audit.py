@@ -25,7 +25,8 @@ import sys
 import io
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 import bench  # noqa: E402  (HEADLINE lists)
 from telecom_competitor_analysis_spark.plans.queries import QUERIES  # noqa: E402
 from telecom_competitor_analysis_spark.session import get_spark  # noqa: E402

@@ -18,10 +18,12 @@ Usage: SPARK_DRIVER_MEMORY=48g python tools/probe_decontam_xn.py \
            /tmp/sfx10 [/tmp/sfx100 ...]
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 

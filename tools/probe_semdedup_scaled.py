@@ -14,10 +14,12 @@ size ≈ corpus/2^planes), assignment cost O(n·planes).
 Usage: python tools/probe_semdedup_scaled.py /tmp/sfx100 100
 (compares sf0.1 with planes=3 vs the ×N dir with planes=3+log2(N))."""
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 from pyspark.sql import functions as F
 
 from telecom_competitor_analysis_spark.operators.similarity import (

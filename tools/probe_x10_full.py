@@ -1,15 +1,17 @@
 """FULL-SURFACE ×10 sweep: measure EVERY bench-listed query (headline +
 ext) at sf0.1 and /tmp/sfx10 and emit a compact markdown table of
 ratios, sorted worst-first. One warm-up + best-of-2 per side (the
-probe_xn methodology, shortened for breadth); queries that fail on the
+tools/probe.py methodology, shortened for breadth); queries that fail on the
 probe dataset are recorded as ERR rows, not skipped silently.
 
 Usage: python tools/probe_x10_full.py [out.md]
 """
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 from bench import HEADLINE, HEADLINE_EXT
 from telecom_competitor_analysis_spark.plans.queries import QUERIES
 from telecom_competitor_analysis_spark.session import get_spark
